@@ -104,147 +104,6 @@ BENCH_QUERIES = [
 N_PASSES = 3
 
 
-def _prior_round_json() -> tuple[str, dict] | None:
-    """Latest checked-in BENCH_r{N}.json, for the per-query delta report."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    best, best_n = None, -1
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if m and int(m.group(1)) > best_n:
-            best, best_n = path, int(m.group(1))
-    if best is None:
-        return None
-    with open(best) as f:
-        data = json.load(f)
-    # the driver wraps the bench line in {"parsed": {...}, "tail": ...}
-    if "queries" not in data and isinstance(data.get("parsed"), dict):
-        data = data["parsed"]
-    return os.path.basename(best), data
-
-
-def _isolated_rerun(name: str, passes: int = 3) -> float:
-    """Min-of-``passes`` wall time for ONE query in a FRESH warmed session —
-    the adjudication protocol for a flagged regression (SCALE.md §7: single-
-    query times drift ±20-25% across sessions and further under in-session
-    contamination from the 49-query sweep; an isolated fresh-session min is
-    the measurement a human would run before believing a flag)."""
-    spark = get_spark(f"bench-isolated-{name}")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    best = float("inf")
-    for _ in range(passes):
-        start = time.perf_counter()
-        QUERIES[name].builder(spark, SF_DIR) \
-            .write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - start)
-    spark.stop()
-    return round(best, 3)
-
-
-def _isolated_baseline(sf: float) -> dict | None:
-    """The committed once-per-round isolated-protocol baseline
-    (``tools/bench_isolated.py`` → BENCH_ISOLATED.json), if present and
-    recorded at this scale factor."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    path = os.path.join(here, "BENCH_ISOLATED.json")
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        data = json.load(f)
-    return data if data.get("sf") == sf else None
-
-
-def _write_delta(timings: dict[str, float], sf: float) -> None:
-    """BENCH_DELTA.json: machine-readable per-query ratio vs the latest
-    recorded round, so cross-round regressions are a jq away instead of a
-    by-eye diff. Ratios within the measured ±20% same-config noise band
-    (SCALE.md §7) are labeled noise; beyond it, flagged. Skipped when the
-    current run's scale factor differs from the baseline's (a scale-probe
-    run must not overwrite the delta with cross-SF ratios).
-
-    Every ``regression`` flag is AUTO-ADJUDICATED in the same run: the
-    query is re-timed in an isolated fresh session (min of 3 warmed
-    passes, ``_isolated_rerun``). When the committed isolated-protocol
-    baseline exists (``BENCH_ISOLATED.json``, recorded once per round by
-    ``tools/bench_isolated.py`` — r6 verdict #3), the verdict compares
-    isolated-vs-ISOLATED — the same protocol on both sides, so a
-    host-throttled sweep cannot manufacture or mask a regression:
-    "confirmed" iff the same-protocol ratio clears the band, else
-    "environmental (isolated-vs-isolated clean)". Without the baseline
-    the old asymmetric comparison runs and the verdict keeps its
-    advisory "environmental?" spelling (isolation removes contamination
-    the in-sweep baseline paid, so a clean ratio is evidence, not
-    proof). "confirmed" is the only load-bearing value either way."""
-    prior = _prior_round_json()
-    if prior is None:
-        return
-    fname, prev = prior
-    if prev.get("sf") is not None and prev["sf"] != sf:
-        return
-    iso_base = _isolated_baseline(sf)
-    prev_q = prev.get("queries", {})
-    delta = {}
-    for name, sec in timings.items():
-        if name in prev_q and prev_q[name] > 0:
-            ratio = round(sec / prev_q[name], 3)
-            delta[name] = {
-                "sec": sec, "prev_sec": prev_q[name], "ratio": ratio,
-                "flag": ("regression" if ratio > 1.2 else
-                         "improvement" if ratio < 0.8 else "noise"),
-            }
-        else:
-            delta[name] = {"sec": sec, "prev_sec": None, "ratio": None,
-                           "flag": "new"}
-    flagged = sorted(
-        (n for n, e in delta.items() if e["flag"] == "regression"),
-        key=lambda n: -delta[n]["ratio"])
-    # a machine-wide slowdown can flag dozens of queries at once; each
-    # isolated rerun costs a fresh JVM (~30-60 s), so adjudicate only the
-    # 5 worst — a mass flagging is itself diagnostic (environmental), and
-    # the skipped entries say so explicitly instead of silently missing
-    for name in flagged[5:]:
-        delta[name]["adjudication"] = "unadjudicated (mass flagging)"
-    for name in flagged[:5]:
-        entry = delta[name]
-        iso = _isolated_rerun(name)
-        entry["isolated_sec"] = iso
-        entry["isolated_ratio"] = round(iso / entry["prev_sec"], 3)
-        base_sec = (iso_base or {}).get("queries", {}).get(name)
-        if base_sec:
-            # same-protocol comparison: isolated rerun vs the committed
-            # isolated baseline — symmetric, host-drift-proof
-            entry["isolated_baseline_sec"] = base_sec
-            entry["isolated_vs_isolated_ratio"] = round(iso / base_sec, 3)
-            entry["adjudication"] = (
-                "confirmed" if entry["isolated_vs_isolated_ratio"] > 1.2
-                else "environmental (isolated-vs-isolated clean)")
-        else:
-            # no baseline: asymmetric comparison, advisory verdict only
-            entry["adjudication"] = (
-                "environmental?" if entry["isolated_ratio"] <= 1.2
-                else "confirmed")
-    shared = [d["ratio"] for d in delta.values() if d["ratio"]]
-    out = {
-        "baseline": fname,
-        "passes": N_PASSES,
-        "isolated_baseline": (
-            {"file": "BENCH_ISOLATED.json", "sf": iso_base["sf"],
-             "n_queries": len(iso_base["queries"])}
-            if iso_base else None),
-        "shared_query_total_ratio": round(
-            sum(timings[n] for n in timings if delta[n]["ratio"])
-            / max(sum(prev_q[n] for n in timings if delta[n]["ratio"]), 1e-9),
-            3) if shared else None,
-        "queries": delta,
-    }
-    here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "BENCH_DELTA.json"), "w") as f:
-        json.dump(out, f, indent=2, sort_keys=True)
-
-
 def run() -> dict:
     spark = get_spark("bench")
     # keep stderr to genuine errors so the recorded bench tail is signal
@@ -272,15 +131,10 @@ def run() -> dict:
     # driver's low-core scaling probe can verify the session honored
     # $SPARK_GRAFT_CPUS instead of inferring it from timing ratios
     # (additions-only; the contract keys are untouched)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     master = spark.sparkContext.master
     shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     spark.stop()
-    # SPARK_GRAFT_NO_DELTA=1: measurement-only mode — skip the
-    # BENCH_DELTA.json rewrite so a judge/driver/ad-hoc rerun can't clobber
-    # the round's committed delta artifact (r8 verdict, "What's wrong" #4).
-    if os.environ.get("SPARK_GRAFT_NO_DELTA") != "1":
-        _write_delta(timings, sf)
     return {
         "metric": "headline_queries_total_sec",
         "value": total,

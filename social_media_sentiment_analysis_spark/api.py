@@ -24,22 +24,19 @@ serving layers (REST, notebooks) collect at the edge.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.sentiment import sentiment_enrich
+from .streaming.sinks import KEY_COL, unstored_rows
 
 
 class SentimentEngine:
     """Batch facade over a keyed tweet store at ``store_path``."""
 
-    def __init__(self, spark: SparkSession, store_path: str,
-                 key_col: str = "tweet_id"):
+    def __init__(self, spark: SparkSession, store_path: str):
         self.spark = spark
         self.store_path = store_path
-        self.key_col = key_col
 
     # -- POST /analyze (sentiment_analysis.py:578-593) ----------------------
     def analyze(self, texts: list[str] | DataFrame,
@@ -56,20 +53,17 @@ class SentimentEngine:
 
     # -- POST /store (sentiment_analysis.py:595-615, S6/D2) -----------------
     def store(self, tweets: DataFrame, text_col: str = "text") -> int:
-        """Score and persist insert-if-absent on the key column (the
-        reference's INSERT OR IGNORE intent). Returns rows actually added.
-        Requires ``key_col`` and a ``processed_at`` timestamp column (added
-        as now() if missing)."""
+        """Score and persist insert-if-absent on ``tweet_id`` (the
+        reference's INSERT OR IGNORE intent, the same ``unstored_rows`` step
+        as the streaming sinks). Returns rows actually added. Requires
+        ``tweet_id`` and a ``processed_at`` timestamp column (added as now()
+        if missing)."""
         enriched = sentiment_enrich(tweets, text_col=text_col)
         if "processed_at" not in enriched.columns:
             enriched = enriched.withColumn(
                 "processed_at",
                 F.current_timestamp().cast("timestamp_ntz"))
-        fresh = enriched.dropDuplicates([self.key_col])
-        if os.path.isdir(self.store_path):
-            existing = self.spark.read.parquet(self.store_path) \
-                .select(self.key_col)
-            fresh = fresh.join(existing, on=self.key_col, how="left_anti")
+        fresh = unstored_rows(enriched, self.store_path)
         added = fresh.count()
         if added:
             fresh.write.mode("append").parquet(self.store_path)
@@ -109,7 +103,7 @@ class SentimentEngine:
         if sentiment is not None:
             df = df.filter(F.col("final_sentiment") == sentiment)
         return df.orderBy(
-            F.desc("processed_at"), F.asc(self.key_col)).limit(limit)
+            F.desc("processed_at"), F.asc(KEY_COL)).limit(limit)
 
     # -- GET /export (S8/O3, sentiment_analysis.py:668-715) -----------------
     def export(self, path: str, fmt: str = "csv",

@@ -3,8 +3,8 @@
 The driver harness passes its own SparkSession into ``__spark_entry__.entry``;
 this factory is for tests, bench.py, and standalone use. Config choices are
 scale-oriented: AQE on (runtime coalesce + skew-join splitting), Arrow for any
-pandas exchange, and a shuffle-partition count sized for the local[32] test
-rig (on a real cluster you'd size it to ~2-3x total cores or rely on AQE
+pandas exchange, and a shuffle-partition count equal to the local core count
+(on a real cluster you'd size it to ~2-3x total cores or rely on AQE
 coalescing from a higher initial number).
 """
 
@@ -13,8 +13,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def get_spark(app_name: str = "social-media-sentiment-spark",
@@ -25,6 +23,8 @@ def get_spark(app_name: str = "social-media-sentiment-spark",
 
     Defaults favor the declarative path: adaptive execution, broadcast joins
     for small dims, vectorized parquet reads, Arrow-batched Python exchange.
+    Without ``master``/``shuffle_partitions`` both follow $SPARK_GRAFT_CPUS,
+    else the machine's core count.
     """
     # Python UDF workers (pandas UDFs, mapInPandas) import this package by
     # name in their own processes and inherit PYTHONPATH from the JVM env —
@@ -37,12 +37,12 @@ def get_spark(app_name: str = "social-media-sentiment-spark",
             repo_root + os.pathsep + os.environ["PYTHONPATH"]
             if os.environ.get("PYTHONPATH") else repo_root)
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions",
-                str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+                str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -27,15 +27,13 @@ from ..functions.sentiment import sentiment_enrich
 from ..schemas import TWEET_ENVELOPE_SCHEMA
 
 
-def read_tweet_file_stream(spark: SparkSession, path: str,
-                           max_files_per_trigger: int | None = None) -> DataFrame:
-    """File-based stream of tweet envelopes (JSONL of TWEET_ENVELOPE_SCHEMA).
-    The file source stands in for Kafka in tests; swap ``read_kafka_stream``
-    in production — downstream code is identical."""
-    reader = spark.readStream.schema(TWEET_ENVELOPE_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(path)
+def read_tweet_file_stream(spark: SparkSession, path: str) -> DataFrame:
+    """File-based stream of tweet envelopes (JSONL of TWEET_ENVELOPE_SCHEMA),
+    one envelope per line through ``parse_envelopes`` — the Kafka source's
+    parse, so both reject the same records. The file source stands in for
+    Kafka in tests; swap ``read_kafka_stream`` in production — downstream
+    code is identical."""
+    return parse_envelopes(spark.readStream.text(path))[0]
 
 
 def read_kafka_stream(spark: SparkSession, bootstrap_servers: str,
@@ -53,8 +51,7 @@ def read_kafka_stream(spark: SparkSession, bootstrap_servers: str,
     )
     if max_offsets_per_trigger:
         reader = reader.option("maxOffsetsPerTrigger", max_offsets_per_trigger)
-    good, _rejects = parse_envelopes(reader.load(), "value")
-    return good
+    return parse_envelopes(reader.load())[0]
 
 
 def parse_envelopes(raw: DataFrame, value_col: str = "value"
@@ -130,17 +127,21 @@ def enrich_tweet_stream(df: DataFrame,
     )
 
 
-def _has_watermark(df: DataFrame) -> bool:
-    """True if the stream already carries an event-time watermark.
+def _with_watermark(df: DataFrame, ts_col: str, delay: str) -> DataFrame:
+    """``df`` with an event-time watermark on ``ts_col``, unless it is a
+    batch frame or a stream that already carries one.
 
     Spark disallows redefining a watermark downstream, so composed
-    pipelines (enrich_tweet_stream's dedup watermark → rollup) must not
-    set a second one. Checked on the analyzed logical plan."""
+    pipelines (enrich_tweet_stream's dedup watermark → rollup) reuse the
+    upstream one. Checked on the analyzed logical plan."""
+    if not df.isStreaming:
+        return df
     try:
-        return "EventTimeWatermark" in df._jdf.queryExecution() \
+        has = "EventTimeWatermark" in df._jdf.queryExecution() \
             .analyzed().toString()
     except Exception:
-        return False
+        has = False
+    return df if has else df.withWatermark(ts_col, delay)
 
 
 def hourly_rollup_stream(enriched: DataFrame,
@@ -153,10 +154,8 @@ def hourly_rollup_stream(enriched: DataFrame,
     a watermark (the dedup one), it is reused instead of redefined —
     late-data cutoff for the rollup is then the upstream bound.
     """
-    if enriched.isStreaming and not _has_watermark(enriched):
-        enriched = enriched.withWatermark("event_time", watermark)
     return (
-        enriched
+        _with_watermark(enriched, "event_time", watermark)
         .groupBy(
             F.window(F.col("event_time"), "1 hour").alias("w"),
             F.col("final_sentiment").alias("sentiment"),
@@ -245,10 +244,8 @@ def trending_words_stream(enriched: DataFrame,
     ``enrich_tweet_stream`` (reuses its watermark, same rule as
     hourly_rollup_stream).
     """
-    if enriched.isStreaming and not _has_watermark(enriched):
-        enriched = enriched.withWatermark("event_time", watermark)
     words = (
-        enriched
+        _with_watermark(enriched, "event_time", watermark)
         .select("event_time",
                 F.explode(F.split(F.lower(F.col("cleaned_text")), r"\s+"))
                 .alias("word"))
@@ -282,10 +279,8 @@ def session_rollup_stream(events: DataFrame, *,
     Output: one row per closed session (append mode) — key, session span,
     event count.
     """
-    if events.isStreaming and not _has_watermark(events):
-        events = events.withWatermark(ts_col, watermark)
     return (
-        events
+        _with_watermark(events, ts_col, watermark)
         .groupBy(F.session_window(F.col(ts_col), gap).alias("s"),
                  F.col(key_col))
         .agg(F.count(F.lit(1)).alias("n_events"))

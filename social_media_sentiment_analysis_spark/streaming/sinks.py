@@ -14,8 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-
-from ..sources.batch import target_exists as _target_exists  # noqa: E402
+from ..sources.batch import target_exists as _target_exists
 
 
 def _restore_displaced(spark, path: str) -> bool:
@@ -38,16 +37,41 @@ def _restore_displaced(spark, path: str) -> bool:
     return True
 
 
-def jsonl_sink(df: DataFrame, path: str, checkpoint: str,
-               partition_granularity: str = "yyyyMMdd_HH") -> DataStreamWriter:
+#: The key of the keyed tweet store: one row per ``tweet_id``.
+KEY_COL = "tweet_id"
+
+
+def _with_hour(df: DataFrame) -> DataFrame:
+    """The Hive-style ``hour=`` partition column of the JSONL archive."""
+    return df.withColumn(
+        "hour", F.date_format(F.col("event_time"), "yyyyMMdd_HH"))
+
+
+def unstored_rows(batch: DataFrame, path: str) -> DataFrame:
+    """The rows of ``batch`` whose key the store at ``path`` does not hold
+    yet: in-batch duplicates dropped on ``KEY_COL``, then a left-anti join
+    against the stored keys when the store exists (``target_exists`` is
+    scheme-aware, so ``file://``/``hdfs://`` stores are probed too).
+    Appending the result is the insert-if-absent step of every keyed
+    writer — the reference's ``INSERT OR IGNORE`` on ``tweet_id UNIQUE``.
+    A store that exists but cannot be read raises; it is never treated as
+    empty."""
+    spark = batch.sparkSession
+    fresh = batch.dropDuplicates([KEY_COL])
+    if _target_exists(spark, path):
+        existing = spark.read.parquet(path).select(KEY_COL)
+        fresh = fresh.join(existing, on=KEY_COL, how="left_anti")
+    return fresh
+
+
+def jsonl_sink(df: DataFrame, path: str, checkpoint: str) -> DataStreamWriter:
     """S5 with the evident intent (hourly partitions — the reference's
     strftime('%Y%m%d_%h') typo made files roll *monthly*,
     twitter_streamer.py:205): append-only JSON partitioned by hour bucket.
     Hive-style hour= directories replace filename suffixes so downstream
     reads get partition pruning."""
     return (
-        df.withColumn(
-            "hour", F.date_format(F.col("event_time"), partition_granularity))
+        _with_hour(df)
         .writeStream.format("json")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
@@ -56,24 +80,18 @@ def jsonl_sink(df: DataFrame, path: str, checkpoint: str,
     )
 
 
-def idempotent_parquet_sink(df: DataFrame, path: str, checkpoint: str,
-                            key_col: str = "tweet_id") -> DataStreamWriter:
+def idempotent_parquet_sink(df: DataFrame, path: str,
+                            checkpoint: str) -> DataStreamWriter:
     """S6/D2: insert-if-absent keyed sink via foreachBatch.
 
-    Each micro-batch drops in-batch duplicates, anti-joins against keys
-    already in the target, and appends the remainder — idempotent under
+    Each micro-batch appends its ``unstored_rows`` — idempotent under
     batch replay. (With a transactional table format — Delta/Iceberg — this
     becomes MERGE WHEN NOT MATCHED; plain parquet keeps the test env
     dependency-free. At very large scale the anti-join right side should be
     pruned to recent partitions — keys are time-clustered.)"""
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        fresh = batch.dropDuplicates([key_col])
-        if _target_exists(spark, path):
-            existing = spark.read.parquet(path).select(key_col)
-            fresh = fresh.join(existing, on=key_col, how="left_anti")
-        fresh.write.mode("append").parquet(path)
+        unstored_rows(batch, path).write.mode("append").parquet(path)
 
     return (
         df.writeStream.foreachBatch(upsert)
@@ -188,8 +206,7 @@ def upsert_parquet_sink(df: DataFrame, path: str, checkpoint: str,
 
 
 def fanout_sink(df: DataFrame, jsonl_path: str, table_path: str,
-                checkpoint: str, key_col: str = "tweet_id",
-                partition_col: str = "event_time") -> DataStreamWriter:
+                checkpoint: str) -> DataStreamWriter:
     """Single-pass fan-out to both reference sinks (SURVEY §3.2: the
     streamer writes every record to the JSONL archive AND the queryable
     store): one foreachBatch caches the micro-batch, writes the
@@ -203,17 +220,12 @@ def fanout_sink(df: DataFrame, jsonl_path: str, table_path: str,
     """
 
     def fan_out(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
         batch.persist()
         try:
-            (batch.withColumn(
-                "hour", F.date_format(F.col(partition_col), "yyyyMMdd_HH"))
+            (_with_hour(batch)
              .write.mode("append").partitionBy("hour").json(jsonl_path))
-            fresh = batch.dropDuplicates([key_col])
-            if _target_exists(spark, table_path):
-                existing = spark.read.parquet(table_path).select(key_col)
-                fresh = fresh.join(existing, on=key_col, how="left_anti")
-            fresh.write.mode("append").parquet(table_path)
+            (unstored_rows(batch, table_path)
+             .write.mode("append").parquet(table_path))
         finally:
             batch.unpersist()
 

@@ -10,9 +10,14 @@ from pyspark.sql import functions as F
 
 
 @pytest.fixture()
-def engine(spark, tmp_path):
+def engine(spark, tmp_path, request):
+    """Engine over a fresh store; ``indirect`` parametrization with "uri"
+    addresses the store as a ``file://`` URI instead of a plain path."""
     from social_media_sentiment_analysis_spark.api import SentimentEngine
-    return SentimentEngine(spark, str(tmp_path / "tweets_store"))
+    store = tmp_path / "tweets_store"
+    if getattr(request, "param", "path") == "uri":
+        return SentimentEngine(spark, store.as_uri())
+    return SentimentEngine(spark, str(store))
 
 
 def _tweets(spark, rows):
@@ -39,6 +44,7 @@ def test_analyze_matches_reference_thresholds(engine):
     assert empty.confidence_score == 0.0
 
 
+@pytest.mark.parametrize("engine", ["path", "uri"], indirect=True)
 def test_store_is_idempotent_and_keyed(engine, spark):
     batch = _tweets(spark, [("t1", "great stuff", _at(0)),
                             ("t2", "bad stuff", _at(1)),

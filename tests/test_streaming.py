@@ -144,6 +144,26 @@ def test_parse_envelopes_rejects_bad_records(spark):
     assert len(bad) == 2 and "{not json at all" in bad  # raw payload kept
 
 
+def test_file_stream_rejects_idless_and_malformed_envelopes(spark, tmp_path):
+    """The file source takes the same parse path as Kafka: an English
+    envelope without ``data.id`` and a line that is not JSON never reach
+    the enriched stream as rows."""
+    src = tmp_path / "in"
+    src.mkdir()
+    idless = _envelope("gone", "great fast launch")
+    del idless["data"]["id"]
+    with open(src / "b.jsonl", "w") as f:
+        f.write(json.dumps(_envelope("ok1", "great fast launch")) + "\n")
+        f.write(json.dumps(idless) + "\n")
+        f.write("{not json at all\n")
+        f.write(json.dumps(_envelope("ok2", "slow bad day")) + "\n")
+    enriched = enrich_tweet_stream(read_tweet_file_stream(spark, str(src)))
+    name = "parse_" + uuid.uuid4().hex[:8]
+    _mem_query(enriched, name).awaitTermination()
+    ids = sorted(r.tweet_id for r in spark.table(name).collect())
+    assert ids == ["ok1", "ok2"]
+
+
 def test_idempotent_sink_replay(spark, stream_input, tmp_path):
     out = str(tmp_path / "tweets_tbl")
     stream = read_tweet_file_stream(spark, stream_input)
